@@ -2,9 +2,9 @@ package graft
 
 /** Minimal JSON string escaping (RFC 8259: quote, backslash, all
   * control chars) shared by every hand-rolled JSON emitter in the
-  * library — Verify's oracle dump and the publish manifest. One
-  * implementation so an escaping fix can never apply to one emitter
-  * and silently miss another. */
+  * library — Verify's oracle dump, the publish manifest and the
+  * runner's step commit records. One implementation so an escaping fix
+  * can never apply to one emitter and silently miss another. */
 object MinJson {
   def str(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
@@ -16,9 +16,28 @@ object MinJson {
     case c => c.toString
   } + "\""
 
-  /** Minimal recursive-descent JSON reader for HARNESS artifacts
-    * (Bench's bench_full.json and kin — trusted, machine-written
-    * input; this is not a general-purpose parser). Objects →
+  /** Render a value tree: maps (keys sorted, so equal trees render
+    * equal), sequences, strings, booleans, Ints and Longs as integer
+    * literals and finite doubles in `Double.toString` form. Anything
+    * else renders as its string. [[parse]] reads every number back as a
+    * Double; a caller that needs exact types tags its values itself. */
+  def render(v: Any): String = v match {
+    case null => "null"
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case n @ (_: Int | _: Long) => n.toString
+    case d: Double if !d.isNaN && !d.isInfinite => d.toString
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.map { case (k, x) => k.toString -> x }.sortBy(_._1)
+        .map { case (k, x) => str(k) + ":" + render(x) }
+        .mkString("{", ",", "}")
+    case it: Iterable[_] => it.map(render).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+
+  /** Minimal recursive-descent JSON reader for machine-written JSON
+    * (Bench's bench_full.json and kin, the runner's commit records —
+    * trusted input; this is not a general-purpose parser). Objects →
     * Map[String, Any], arrays → Seq[Any], numbers → Double, strings →
     * String, true/false/null → Boolean/null. */
   def parse(s: String): Any = {

@@ -19,7 +19,10 @@ import graft.spec._
   * order with `foreach`/`sequential_foreach` fan-out → collect
   * `output_var` records. `requires_pipelines` run first, topologically,
   * memoized per-session (§3.3 step 0). The materialization ledger gives
-  * the reference's idempotent re-run semantics (§4).
+  * the reference's idempotent re-run semantics (§4): each invocation
+  * skips when its declared outputs are done, replaying its recorded
+  * fields into `output_var`, and otherwise runs and writes a commit
+  * record once the plugin returns ([[Ledger]]).
   *
   * Parallelism: `foreach` fans out on a bounded pool; `parallel_with`
   * names a shared concurrency group (one bounded pool per group —
@@ -166,13 +169,14 @@ final class PipelineRunner(
     // soon as their last in-pipeline consumer completes (Retention) —
     // nothing is dropped on the failure path (afterStep is skipped).
     val retention = Retention.plan(p, scope)
+    val tables = Ledger.tablePlan(p, scope)
     val asyncRuns = new AsyncRuns(Some(asyncPool))
     val results = List.newBuilder[StepResult]
     try {
       p.steps.zipWithIndex.foreach { case (step, i) =>
         val stepScope = scope.withStep(i + 1)
         val result = runStep(step, i, stepScope, p.sourcePath, asyncRuns,
-          retention)
+          retention, tables)
         results += result
         step.outputVar.foreach { name =>
           scope = scope.withOutput(name, result.fields)
@@ -202,23 +206,30 @@ final class PipelineRunner(
   private def runStep(step: Step, idx: Int, scope: Scope,
                       sourcePath: Option[String],
                       asyncRuns: AsyncRuns,
-                      retention: Option[Retention.State]): StepResult = {
+                      retention: Option[Retention.State],
+                      tables: Ledger.TablePlan): StepResult = {
     val plugin = registry.resolve(step.plugin)
 
     def invoke(itemScope: Scope): StepResult = {
       val args = Interpolator.resolve(step.args, itemScope)
         .asInstanceOf[Map[String, Any]]
       val overwrite = args.get("overwrite").exists(_.toString.toBoolean)
+      val ledger = new Ledger.Entry(args, sourcePath, idx, itemScope.item,
+        tables)
       // tombstone-aware skip: a dropped intermediate counts as
       // materialized only while every transitive consumer also skips —
       // a missing downstream output re-runs the chain back to here
-      if (Ledger.stepSkippable(args, overwrite) ||
-          retention.exists(_.tombstoneSkippable(idx, args, overwrite)))
-        StepResult(skipped = true)
+      val fileDone = (o: Path) => Ledger.materialized(o) ||
+        retention.exists(_.tombstoneSkippable(idx, o))
+      if (ledger.skippable(overwrite, fileDone))
+        StepResult(ledger.replay(), skipped = true)
       else withResources(step) {
         retention.foreach(_.stepRan(args)) // re-materializing: clear tombstones
-        plugin.run(StepContext(args, itemScope, sparkProvider, this,
-          sourcePath, asyncRuns))
+        ledger.begin(overwrite)
+        val result = plugin.run(StepContext(args, itemScope, sparkProvider,
+          this, sourcePath, asyncRuns))
+        ledger.commit(result.fields)
+        result
       }
     }
 
@@ -287,13 +298,14 @@ final class PipelineRunner(
     }
   }
 
-  /** Fan-out result record: last non-skipped fields win plus counts. */
+  /** Fan-out result record: the last item's fields (run or replayed by
+    * the ledger) plus counts. */
   private def mergeResults(rs: Seq[StepResult]): StepResult = {
-    val ran = rs.filterNot(_.skipped)
+    val nSkipped = rs.count(_.skipped)
     StepResult(
-      fields = ran.lastOption.map(_.fields).getOrElse(Map.empty) ++
-        Map("n_invocations" -> rs.size, "n_skipped" -> (rs.size - ran.size)),
-      skipped = ran.isEmpty && rs.nonEmpty)
+      fields = rs.lastOption.map(_.fields).getOrElse(Map.empty) ++
+        Map("n_invocations" -> rs.size, "n_skipped" -> nSkipped),
+      skipped = rs.nonEmpty && nSkipped == rs.size)
   }
 
   /** Daemon threads: a completed run must never pin the JVM open (the

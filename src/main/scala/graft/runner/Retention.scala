@@ -51,23 +51,18 @@ object Retention {
       /** step idx → consumer idxs (any step, not just scratch). */
       private[Retention] val consumers: Map[Int, Seq[Int]]) {
 
-    /** Tombstone-aware skip: the step's outputs are all materialized OR
-      * tombstoned, and every consumer of this step is itself predicted
-      * to skip (so nothing will need the dropped data). Evaluated with
-      * the RUNTIME-resolved args for the step itself; downstream uses
-      * the pre-pass prediction. */
-    def tombstoneSkippable(idx: Int, args: Map[String, Any],
-                           overwrite: Boolean): Boolean = {
-      val outs = Ledger.declaredOutputs(args)
-      !overwrite && outs.nonEmpty &&
-        outs.forall(o => Ledger.materialized(o) || tombstoned(o)) &&
+    /** Tombstone-aware skip: output `o` of step `idx` is tombstoned and
+      * every consumer of this step is itself predicted to skip (so
+      * nothing will need the dropped data). The output path is the
+      * RUNTIME-resolved one; downstream uses the pre-pass prediction. */
+    def tombstoneSkippable(idx: Int, o: Path): Boolean =
+      tombstoned(o) &&
         consumers.getOrElse(idx, Nil).forall(j => willSkip.getOrElse(j, false))
-    }
 
     /** A step that actually RAN re-materialized its outputs — clear any
       * stale tombstones so presence wins again. */
     def stepRan(args: Map[String, Any]): Unit =
-      Ledger.declaredOutputs(args).foreach(o =>
+      Ledger.fileOutputs(args).foreach(o =>
         Files.deleteIfExists(tombstonePath(o)))
 
     /** Called after step `idx` completes: drop every scratch output
@@ -102,7 +97,7 @@ object Retention {
     if (scratchIdx.isEmpty) return None
 
     def rawOutputs(s: Step): Seq[String] =
-      Seq("output_path", "output_file").flatMap(s.args.get).map(_.toString)
+      Ledger.fileKeys.flatMap(s.args.get).map(_.toString)
     def rawStrings(v: Any): Seq[String] = v match {
       case s: String => Seq(s)
       case m: Map[_, _] => m.values.toSeq.flatMap(rawStrings)

@@ -275,7 +275,8 @@ class RemoteTreeWalker(lister: RemoteTreeWalker.Lister,
       val stream = if (recursive) Files.walk(root) else Files.list(root)
       try {
         stream.iterator().asScala
-          .filter(p => Files.isRegularFile(p) && matcher.matches(p.getFileName))
+          .filter(p => Files.isRegularFile(p) && !Ledger.isRecord(p) &&
+            matcher.matches(p.getFileName))
           .foreach(p => stage(p.toUri.toString, root.relativize(p).toString))
       } finally stream.close()
     } else lister.list(url) match {
@@ -419,7 +420,8 @@ object ArchiveExtractPlugin extends StepPlugin {
     val matcher = FileSystems.getDefault.getPathMatcher(s"glob:$glob")
     val stream = Files.walk(root)
     try stream.iterator().asScala
-      .filter(p => Files.isRegularFile(p) && matcher.matches(p))
+      .filter(p => Files.isRegularFile(p) && !Ledger.isRecord(p) &&
+        matcher.matches(p))
       .toSeq.sortBy(_.toString)
     finally stream.close()
   }

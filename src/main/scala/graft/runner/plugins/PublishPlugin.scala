@@ -55,7 +55,8 @@ object PublishTargetPlugin extends StepPlugin {
       if (Files.isDirectory(source)) {
         val stream = Files.walk(source)
         try stream.iterator().asScala
-          .filter(Files.isRegularFile(_)).toSeq.sortBy(_.toString)
+          .filter(f => Files.isRegularFile(f) && !Ledger.isRecord(f))
+          .toSeq.sortBy(_.toString)
         finally stream.close()
       } else Seq(source)
 

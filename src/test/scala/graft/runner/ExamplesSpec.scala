@@ -4,23 +4,37 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkSpecBase
 import graft.runner.plugins.DefaultRegistry
+import graft.spec.{SysContext, Yaml}
 
 /** The shipped example pipelines (examples dir) must actually run —
   * they are the user-facing face of the DSL (README points at them), so
   * they run here end-to-end against the real test data. */
 class ExamplesSpec extends SparkSpecBase {
 
+  private val examples = Paths.get("examples").toAbsolutePath
+  // a fixed clock: `{sys.now.yymmdd}` output dirs must not roll between
+  // a cold run and its re-run
+  private val clock = SysContext(
+    java.time.LocalDateTime.of(2026, 1, 1, 0, 0), "examples")
+
   private def makeRunner(work: java.nio.file.Path): PipelineRunner =
     new PipelineRunner(
       DefaultRegistry(),
-      env = Map("workdir" -> work.toString),
+      env = graft.RunPipeline.loadProfile("dev", Seq(examples)) +
+        ("workdir" -> work.toString),
       sparkProvider = () => spark,
-      assetRoots = Seq(Paths.get("examples").toAbsolutePath))
+      assetRoots = Seq(examples),
+      sysContext = Some(clock))
+
+  /** example → the workdir of its cold run, for the re-run sweep. */
+  private val coldWorkdirs =
+    scala.collection.concurrent.TrieMap.empty[String, java.nio.file.Path]
 
   private def run(example: String): (java.nio.file.Path, PipelineRunner#RunResult) = {
     val work = Files.createTempDirectory("graft_examples")
-    (work, makeRunner(work)
-      .runFile(Paths.get(s"examples/$example").toAbsolutePath))
+    val res = makeRunner(work).runFile(examples.resolve(example))
+    coldWorkdirs.put(example, work)
+    (work, res)
   }
 
   test("examples/corpus_clean.yml runs: verdicts, keepers, publish") {
@@ -35,6 +49,27 @@ class ExamplesSpec extends SparkSpecBase {
       assert(files.exists(_.contains("published/gdrive")))
       assert(files.exists(_.endsWith("_manifest.json")))
     } finally stream.close()
+  }
+
+  test("corpus_clean.yml re-run on its cold workdir: skipped steps " +
+    "replay their outputs, publish gets the real keepers path") {
+    val (work, cold) = run("corpus_clean.yml")
+    val again = makeRunner(work).runFile(examples.resolve("corpus_clean.yml"))
+    assert(again.results.map(_.skipped) == List(true, true, false))
+    // the skipped steps bind the same fields, of the same classes, as
+    // the cold run (`==` alone would take 1L for 1)
+    def typed(v: Any): Any = v match {
+      case m: Map[_, _] => m.map { case (k, x) => k -> typed(x) }
+      case l: Seq[_] => l.map(typed)
+      case null => null
+      case x => (x, x.getClass)
+    }
+    Seq("verdicts", "keepers").foreach(v =>
+      assert(typed(again.scope.outputs(v)) == typed(cold.scope.outputs(v)), v))
+    // publish found the keepers the cold run published: nothing to copy
+    val publish = again.results(2).fields
+    assert(publish("n_published") == 0 &&
+      publish("n_skipped").asInstanceOf[Int] > 0, s"got $publish")
   }
 
   test("examples/near_dup_audit.yml runs: quality, dedup, fingerprints") {
@@ -439,5 +474,29 @@ class ExamplesSpec extends SparkSpecBase {
     assert(byStep(3)("n_estimated").asInstanceOf[Long] > 0L)
     // quantiles: one estimate row per requested q, from merged partials
     assert(byStep(4)("n_quantiles").asInstanceOf[Long] == 4L)
+  }
+
+  test("every example's immediate re-run succeeds and skips every step " +
+    "with a declared file or table output") {
+    import scala.jdk.CollectionConverters._
+    val all = {
+      val s = Files.list(examples)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".yml")).toList.sorted
+      finally s.close()
+    }
+    assert(all.size >= 12, all)
+    all.foreach { example =>
+      val work = coldWorkdirs.getOrElse(example, run(example)._1)
+      val again = makeRunner(work).runFile(examples.resolve(example))
+      // `output_dir` steps (corpus_audit) declare no output: they re-run
+      val declaring = Yaml.loadPipeline(examples.resolve(example)).steps
+        .map(s => Ledger.declaredOutputs(s.args).nonEmpty)
+      val ranAnyway = declaring.zip(again.results).zipWithIndex.collect {
+        case ((true, r), i) if !r.skipped => i
+      }
+      assert(ranAnyway.isEmpty,
+        s"$example re-ran steps $ranAnyway that declare outputs")
+    }
   }
 }

@@ -64,4 +64,81 @@ class JdbcDuckSpec extends SparkSpecBase {
     assert(JdbcWritePlugin.writeDf(empty, url, "t", "overwrite") == 0L)
     assert(readBack(db, "t").isEmpty)
   }
+
+  /** A driver ahead of DuckDB's for `jdbc:duckdb:` URLs that hands out
+    * the same connections, but keeps every statement they create until
+    * it is closed. */
+  private final class StatementTracker(duck: java.sql.Driver)
+      extends java.sql.Driver {
+    val open = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    private def delegate[T](iface: Class[T], target: AnyRef)(
+        onCall: (String, AnyRef) => AnyRef): T =
+      java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+        Array[Class[_]](iface), (_, m, a) => {
+          val result =
+            try m.invoke(target, Option(a).getOrElse(Array.empty[AnyRef]): _*)
+            catch { case e: java.lang.reflect.InvocationTargetException =>
+              throw e.getCause }
+          onCall(m.getName, result)
+        }).asInstanceOf[T]
+    def connect(url: String, info: java.util.Properties): java.sql.Connection =
+      if (!acceptsURL(url)) null
+      else delegate(classOf[java.sql.Connection], duck.connect(url, info)) {
+        case ("createStatement", st: java.sql.Statement) =>
+          open.add(st)
+          delegate(classOf[java.sql.Statement], st) { (name, r) =>
+            if (name == "close") open.remove(st)
+            r
+          }
+        case (_, r) => r
+      }
+    def acceptsURL(url: String): Boolean = url.startsWith("jdbc:duckdb:")
+    def getPropertyInfo(url: String, info: java.util.Properties) =
+      duck.getPropertyInfo(url, info)
+    def getMajorVersion: Int = duck.getMajorVersion
+    def getMinorVersion: Int = duck.getMinorVersion
+    def jdbcCompliant: Boolean = false
+    def getParentLogger = throw new java.sql.SQLFeatureNotSupportedException
+  }
+
+  test("writeDf closes every statement it opens, in every mode") {
+    import scala.jdk.CollectionConverters._
+    import java.sql.DriverManager
+    graft.sources.DuckDbDialect.ensureRegistered()
+    val duck = DriverManager.getDrivers.asScala
+      .find(_.getClass.getName == "org.duckdb.DuckDBDriver").get
+    val tracker = new StatementTracker(duck)
+    // DriverManager asks drivers in registration order: put the tracker
+    // first; Spark's own JDBC reads still find DuckDB's driver by class
+    DriverManager.deregisterDriver(duck)
+    DriverManager.registerDriver(tracker)
+    DriverManager.registerDriver(duck)
+    val db = tmpDb()
+    val url = s"jdbc:duckdb:$db"
+    // DuckDB refuses a connection with a different configuration while
+    // another instance of the same file is alive in this JVM
+    def reopenReadOnly(): Long = graft.sources.DuckGate.withDuck {
+      val props = new java.util.Properties()
+      props.setProperty("duckdb.read_only", "true")
+      val con = duck.connect(url, props)
+      try {
+        val st = con.createStatement()
+        try {
+          val rs = st.executeQuery("SELECT COUNT(*) FROM t")
+          try { rs.next(); rs.getLong(1) } finally rs.close()
+        } finally st.close()
+      } finally con.close()
+    }
+    try {
+      val rows = Seq((1L, "alpha", 10.0), (2L, "beta", 20.0))
+        .toDF("id", "name", "score")
+      Seq("overwrite" -> 2L, "append" -> 4L, "upsert" -> 2L).foreach {
+        case (mode, n) =>
+          JdbcWritePlugin.writeDf(rows, url, "t", mode, Seq("id"))
+          assert(tracker.open.isEmpty,
+            s"$mode left ${tracker.open.size} statement(s) open")
+          assert(reopenReadOnly() == n, mode)
+      }
+    } finally DriverManager.deregisterDriver(tracker)
+  }
 }

@@ -3,6 +3,8 @@ package graft.runner
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpecBase
 import graft.runner.plugins.DefaultRegistry
 import graft.spec.{SysContext, Yaml}
@@ -29,8 +31,31 @@ class RunnerSpec extends SparkSpecBase {
     }
   }
 
+  private object FailIfPlugin extends StepPlugin {
+    val name = "fail_if"
+    def run(ctx: StepContext): StepResult =
+      if (ctx.argBool("fail", default = false))
+        throw new IllegalStateException("injected fault")
+      else StepResult()
+  }
+
+  /** Writes `output_path` and returns fields of many classes. */
+  private object TypedFieldsPlugin extends StepPlugin {
+    val name = "typed_fields"
+    def run(ctx: StepContext): StepResult = {
+      val p = Paths.get(ctx.argStr("output_path"))
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, "x\n")
+      StepResult(Map("output_path" -> p.toString, "n_int" -> 3,
+        "n_long" -> 3L, "big" -> Long.MaxValue, "ratio" -> 0.1,
+        "nan" -> Double.NaN, "f" -> 1.5f, "ok" -> true, "none" -> null,
+        "parts" -> List(1, "a", 2L), "nested" -> Map("k" -> 7)))
+    }
+  }
+
   private def runner(root: Path) = new PipelineRunner(
-    DefaultRegistry().withPlugins(Seq(CountingPlugin, WriteFilePlugin)),
+    DefaultRegistry().withPlugins(Seq(CountingPlugin, WriteFilePlugin,
+      FailIfPlugin, TypedFieldsPlugin)),
     env = Map("basedir" -> root.toString, "workdir" -> s"$root/work"),
     sparkProvider = () => spark,
     assetRoots = Seq(root),
@@ -994,5 +1019,325 @@ class RunnerSpec extends SparkSpecBase {
     val res2 = r.runFile(p)
     assert(res2.results(0).skipped,
       "tombstone with no consumers must ledger-skip the producer")
+  }
+
+  test("a skipped step binds its output arguments when it has no commit " +
+    "record (an output made outside the runner)") {
+    val root = tmpDir()
+    val made = root.resolve("made.csv")
+    Files.writeString(made, "id\n1\n")
+    val p = write(root, "replay.yml",
+      s"""steps:
+         |  - plugin: sql_transform
+         |    args:
+         |      query: "SELECT 1 AS id"
+         |      output_path: "$made"
+         |    output_var: made
+         |  - plugin: echo
+         |    args:
+         |      message: "{made.output_path}"
+         |""".stripMargin)
+    val res = runner(root).runFile(p)
+    assert(res.results(0).skipped)
+    assert(res.results(1).fields("message") == made.toString)
+  }
+
+  // ---- commit records for table outputs (jdbc_write into a .duckdb) ----
+
+  /** seed (overwrite) → an optional injected fault → upsert, all on one
+    * DuckDB table. `fail`, `force_seed`, `seed_input` and
+    * `changes_input` are vars a run overrides. */
+  private def storePipeline(root: Path): (Path, Path) = {
+    import spark.implicits._
+    Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("id", "score")
+      .write.parquet(s"$root/seed.parquet")
+    Seq((1L, 11.0), (5L, 50.0)).toDF("id", "score")
+      .write.parquet(s"$root/seed2.parquet")
+    Seq((2L, 99.0), (4L, 40.0)).toDF("id", "score")
+      .write.parquet(s"$root/changes.parquet")
+    Seq((3L, 33.0)).toDF("id", "score")
+      .write.parquet(s"$root/changes2.parquet")
+    val db = root.resolve("db/store.duckdb")
+    val p = write(root, "store.yml",
+      s"""vars:
+         |  fail: "false"
+         |  force_seed: "false"
+         |  seed_input: "$root/seed.parquet"
+         |  changes_input: "$root/changes.parquet"
+         |steps:
+         |  - plugin: jdbc_write
+         |    args:
+         |      input: "{seed_input}"
+         |      db_path: "$db"
+         |      table: scores
+         |      overwrite: "{force_seed}"
+         |  - plugin: fail_if
+         |    args:
+         |      fail: "{fail}"
+         |  - plugin: jdbc_write
+         |    args:
+         |      input: "{changes_input}"
+         |      db_path: "$db"
+         |      table: scores
+         |      mode: upsert
+         |      keys: [id]
+         |""".stripMargin)
+    (p, db)
+  }
+
+  private def scores(db: Path, table: String = "scores"): Map[Long, Double] =
+    graft.sources.DuckGate.withDuck {
+      val con = java.sql.DriverManager.getConnection(s"jdbc:duckdb:$db")
+      try {
+        val st = con.createStatement()
+        try {
+          val rs = st.executeQuery(s"SELECT id, score FROM $table")
+          val out = Iterator.continually(rs).takeWhile(_.next())
+            .map(r => r.getLong(1) -> r.getDouble(2)).toMap
+          rs.close()
+          out
+        } finally st.close()
+      } finally con.close()
+    }
+
+  private val seeded =
+    Map(1L -> 10.0, 2L -> 99.0, 3L -> 30.0, 4L -> 40.0)
+
+  /** Which steps ran (not skipped), in order. */
+  private def ran(res: PipelineRunner#RunResult): List[Boolean] =
+    res.results.map(!_.skipped)
+
+  test("ledger: a fault between seed and upsert re-runs only the upsert") {
+    val root = tmpDir()
+    val (p, db) = storePipeline(root)
+    val r = runner(root)
+    val err = intercept[IllegalStateException](
+      r.runFile(p, Map("fail" -> "true")))
+    assert(err.getMessage == "injected fault")
+    assert(scores(db) == Map(1L -> 10.0, 2L -> 20.0, 3L -> 30.0))
+    val again = r.runFile(p)
+    assert(ran(again) == List(false, true, true))
+    assert(scores(db) == seeded)
+    // and now every write is committed
+    assert(ran(r.runFile(p)) == List(false, true, false))
+  }
+
+  test("ledger: a deleted .duckdb file re-runs both writes in order") {
+    val root = tmpDir()
+    val (p, db) = storePipeline(root)
+    val r = runner(root)
+    assert(ran(r.runFile(p)) == List(true, true, true))
+    assert(scores(db) == seeded)
+    assert(ran(r.runFile(p)) == List(false, true, false))
+    Files.delete(db)
+    Files.deleteIfExists(Paths.get(s"$db.wal"))
+    assert(ran(r.runFile(p)) == List(true, true, true))
+    assert(scores(db) == seeded)
+  }
+
+  test("ledger: overwrite:true re-runs the seed and the upsert on top of it") {
+    val root = tmpDir()
+    val (p, db) = storePipeline(root)
+    val r = runner(root)
+    r.runFile(p)
+    val forced = r.runFile(p, Map("force_seed" -> "true"))
+    // the forced seed replaced the table, so the upsert's effect is gone
+    // and its record with it: a skipped upsert would leave 2 -> 20.0
+    assert(ran(forced) == List(true, true, true))
+    assert(scores(db) == seeded)
+    assert(ran(r.runFile(p)) == List(false, true, false))
+  }
+
+  test("ledger: a changed input re-runs the write (and the later upsert)") {
+    val root = tmpDir()
+    val (p, db) = storePipeline(root)
+    val r = runner(root)
+    r.runFile(p)
+    val changed = r.runFile(p, Map("seed_input" -> s"$root/seed2.parquet"))
+    assert(ran(changed) == List(true, true, true))
+    assert(scores(db) == Map(1L -> 11.0, 5L -> 50.0, 2L -> 99.0, 4L -> 40.0))
+  }
+
+  test("ledger: a mode:append re-run does not append the rows again") {
+    val root = tmpDir()
+    import spark.implicits._
+    Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("id", "score")
+      .write.parquet(s"$root/rows.parquet")
+    val db = root.resolve("db/store.duckdb")
+    val p = write(root, "append.yml",
+      s"""steps:
+         |  - plugin: jdbc_write
+         |    args:
+         |      input: "$root/rows.parquet"
+         |      db_path: "$db"
+         |      table: scores
+         |      mode: append
+         |    output_var: appended
+         |  - plugin: echo
+         |    args:
+         |      message: "{appended.n_rows} rows into {appended.table}"
+         |""".stripMargin)
+    val r = runner(root)
+    val cold = r.runFile(p)
+    assert(cold.results(1).fields("message") == "3 rows into scores")
+    val again = r.runFile(p)
+    assert(again.results(0).skipped)
+    assert(scores(db).size == 3)
+    // the skipped write replays its recorded fields
+    assert(again.results(1).fields("message") == "3 rows into scores")
+  }
+
+  test("ledger: a changed upsert input rebuilds the table from the seed") {
+    val root = tmpDir()
+    val (p, db) = storePipeline(root)
+    val r = runner(root)
+    r.runFile(p)
+    assert(scores(db) == seeded)
+    // applied on top of the skipped seed, the new changes would keep the
+    // old changes' rows 2 -> 99.0 and 4 -> 40.0
+    val changed = r.runFile(p, Map("changes_input" -> s"$root/changes2.parquet"))
+    assert(ran(changed) == List(true, true, true))
+    val cold = Map(1L -> 10.0, 2L -> 20.0, 3L -> 33.0)
+    assert(scores(db) == cold)
+    assert(ran(r.runFile(p, Map("changes_input" -> s"$root/changes2.parquet")))
+      == List(false, true, false))
+    assert(scores(db) == cold)
+  }
+
+  test("ledger: a deleted database file re-runs the writes of every table " +
+    "in it") {
+    val root = tmpDir()
+    import spark.implicits._
+    Seq((1L, 1.0)).toDF("id", "score").write.parquet(s"$root/a.parquet")
+    Seq((2L, 2.0)).toDF("id", "score").write.parquet(s"$root/b.parquet")
+    val db = root.resolve("db/two.duckdb")
+    val p = write(root, "two.yml",
+      s"""steps:
+         |  - plugin: jdbc_write
+         |    args: {input: "$root/a.parquet", db_path: "$db", table: ta}
+         |  - plugin: jdbc_write
+         |    args: {input: "$root/b.parquet", db_path: "$db", table: tb}
+         |""".stripMargin)
+    val r = runner(root)
+    assert(ran(r.runFile(p)) == List(true, true))
+    assert(ran(r.runFile(p)) == List(false, false))
+    Files.delete(db)
+    Files.deleteIfExists(Paths.get(s"$db.wal"))
+    // ta's write recreates the file; tb's record must not vouch for it
+    assert(ran(r.runFile(p)) == List(true, true))
+    assert(scores(db, "ta") == Map(1L -> 1.0))
+    assert(scores(db, "tb") == Map(2L -> 2.0))
+  }
+
+  test("ledger: an append whose input changed, with no replacing write to " +
+    "rebuild its table, fails instead of appending on top") {
+    val root = tmpDir()
+    import spark.implicits._
+    Seq((1L, 1.0), (2L, 2.0)).toDF("id", "score")
+      .write.parquet(s"$root/rows.parquet")
+    Seq((3L, 3.0)).toDF("id", "score").write.parquet(s"$root/rows2.parquet")
+    val db = root.resolve("db/log.duckdb")
+    val p = write(root, "log.yml",
+      s"""vars:
+         |  rows: "$root/rows.parquet"
+         |steps:
+         |  - plugin: jdbc_write
+         |    args: {input: "{rows}", db_path: "$db", table: scores, mode: append}
+         |""".stripMargin)
+    val r = runner(root)
+    r.runFile(p)
+    val changed = Map("rows" -> s"$root/rows2.parquet")
+    val err = intercept[IllegalStateException](r.runFile(p, changed))
+    assert(err.getMessage.contains("table scores"), err.getMessage)
+    assert(scores(db).keySet == Set(1L, 2L))
+    // still refused on the next run; a deleted file rebuilds it
+    intercept[IllegalStateException](r.runFile(p, changed))
+    Files.delete(db)
+    Files.deleteIfExists(Paths.get(s"$db.wal"))
+    assert(ran(r.runFile(p, changed)) == List(true))
+    assert(scores(db) == Map(3L -> 3.0))
+  }
+
+  test("ledger: a write before a replacing write keeps its record, and a " +
+    "changed one re-runs the replacing write after it") {
+    val root = tmpDir()
+    import spark.implicits._
+    Seq((1L, 1.0)).toDF("id", "score").write.parquet(s"$root/early.parquet")
+    Seq((7L, 7.0)).toDF("id", "score").write.parquet(s"$root/early2.parquet")
+    Seq((2L, 2.0)).toDF("id", "score").write.parquet(s"$root/final.parquet")
+    val db = root.resolve("db/order.duckdb")
+    val p = write(root, "order.yml",
+      s"""vars:
+         |  early: "$root/early.parquet"
+         |steps:
+         |  - plugin: jdbc_write
+         |    args: {input: "{early}", db_path: "$db", table: scores, mode: append}
+         |  - plugin: jdbc_write
+         |    args: {input: "$root/final.parquet", db_path: "$db", table: scores}
+         |""".stripMargin)
+    val r = runner(root)
+    assert(ran(r.runFile(p)) == List(true, true))
+    assert(ran(r.runFile(p)) == List(false, false))
+    assert(scores(db) == Map(2L -> 2.0))
+    val changed = r.runFile(p, Map("early" -> s"$root/early2.parquet"))
+    assert(ran(changed) == List(true, true))
+    assert(scores(db) == Map(2L -> 2.0))
+  }
+
+  test("ledger: replayed output_var fields keep the classes of the cold " +
+    "run's fields") {
+    val root = tmpDir()
+    val p = write(root, "typed.yml",
+      s"""steps:
+         |  - plugin: typed_fields
+         |    args:
+         |      output_path: "$root/out/typed.txt"
+         |""".stripMargin)
+    val r = runner(root)
+    val cold = r.runFile(p).results.head
+    val again = r.runFile(p).results.head
+    assert(!cold.skipped && again.skipped)
+    assert(again.fields.keySet == cold.fields.keySet)
+    def shape(v: Any): Any = v match {
+      case null => "null"
+      case d: Double if d.isNaN => "NaN"
+      case m: Map[_, _] => m.map { case (k, x) => k -> shape(x) }
+      case l: Seq[_] => l.map(shape)
+      case x => (x, x.getClass)
+    }
+    cold.fields.foreach { case (k, v) =>
+      assert(shape(again.fields(k)) == shape(v), k)
+    }
+  }
+
+  test("ledger: commit records stay out of published directories and " +
+    "file listings") {
+    val root = tmpDir()
+    val p = write(root, "records.yml",
+      s"""steps:
+         |  - plugin: typed_fields
+         |    args:
+         |      output_path: "$root/out/typed.txt"
+         |  - plugin: publish_target
+         |    args:
+         |      source: "$root/out"
+         |      target_uri: "gdrive://data/etl/typed"
+         |      publish_root: "$root/publish_root"
+         |  - plugin: ftp_download_tree
+         |    args:
+         |      url: "file://$root/out"
+         |      out: "$root/mirror"
+         |""".stripMargin)
+    runner(root).runFile(p)
+    assert(Files.exists(root.resolve("out/.typed.txt.commit")))
+    def names(d: Path): Set[String] = {
+      val s = Files.list(d)
+      try s.iterator().asScala.map(_.getFileName.toString).toSet
+      finally s.close()
+    }
+    val staged = root.resolve("publish_root/gdrive/data/etl/typed")
+    assert(names(staged) == Set("typed.txt", "_manifest.json"))
+    assert(!Files.readString(staged.resolve("_manifest.json")).contains("commit"))
+    assert(names(root.resolve("mirror")) == Set("typed.txt"))
   }
 }
